@@ -1,15 +1,12 @@
-"""Pure-stdlib audio codecs + deterministic DSP features for the
+"""Pure-stdlib WAV codec + deterministic DSP features for the
 multimodal seam.
 
 Training corpora carry audio as opaque binary columns; the container
-bundles no audio library, so — like the image modules — this
-implements the PUBLIC container formats from scratch with struct +
-numpy: RIFF/WAVE (PCM 8/16/24/32-bit, IEEE float32/64, µ-law, A-law,
-and WAVE_FORMAT_EXTENSIBLE sub-formats), Sun AU (.snd big-endian:
-µ-law, signed PCM 8/16/24/32, float32/64, A-law), and AIFF / AIFF-C
-(IFF big-endian, 80-bit extended-float sample rates, NONE/sowt byte
-orders, ulaw/alaw/fl32/fl64 compression). G.711 µ-law/A-law expansion
-uses the classic public-domain Sun g711.c formulas, vectorized.
+bundles no audio library, so this implements the public RIFF/WAVE
+container from scratch with struct + numpy: PCM 8/16/24/32-bit, IEEE
+float32/64, and WAVE_FORMAT_EXTENSIBLE sub-formats. Other formats
+(AU, AIFF, companded G.711, MP3, …) are a real decoder's job: inject
+one through the ``decoder=`` seam of ``extract_audio_features``.
 
 All decoders return ``(samples, rate)`` with samples float64 of shape
 (n_frames, channels) in [-1, 1) — the contract of the
@@ -24,10 +21,9 @@ constellation hashes, k smallest kept — the audio analogue of the
 text module's rolling-hash document fingerprints).
 
 External vectors: CPython's bundled pluck-* test clips (PSF-licensed
-public test data, tests/fixtures/audio/) — one waveform shipped in
-three independent containers (WAV/AIFF/AU) at four PCM depths plus
-µ-law and A-law companding, giving cross-container exactness and
-cross-compander SNR oracles no fixture writer could fake.
+public test data, tests/fixtures/audio/) — one waveform at four PCM
+depths plus a WAVE_FORMAT_EXTENSIBLE copy, checked against the stdlib
+``wave`` reader and against each other.
 
 Scale note: everything here is whole-array numpy per payload inside
 Arrow-batched ``mapInPandas`` — no per-sample Python loops; clips in
@@ -44,56 +40,25 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------------
-# G.711 companding (Sun g711.c, public domain)
-
-_BIAS = 0x84
-
-
-def ulaw_to_linear(u: np.ndarray) -> np.ndarray:
-    """µ-law bytes → int16-scale linear values (vectorized)."""
-    u = (~np.asarray(u, dtype=np.uint8)).astype(np.int32)
-    t = ((u & 0x0F) << 3) + _BIAS
-    t <<= (u & 0x70) >> 4
-    return np.where(u & 0x80, _BIAS - t, t - _BIAS)
-
-
-def alaw_to_linear(a: np.ndarray) -> np.ndarray:
-    """A-law bytes → int16-scale linear values (vectorized)."""
-    a = (np.asarray(a, dtype=np.uint8) ^ 0x55).astype(np.int32)
-    t = (a & 0x0F) << 4
-    seg = (a & 0x70) >> 4
-    t = np.where(seg == 0, t + 8, np.where(seg == 1, t + 0x108, (t + 0x108) << np.maximum(seg - 1, 0)))
-    return np.where(a & 0x80, t, -t)
-
-
-# ---------------------------------------------------------------------------
 # sample unpacking helpers
 
 
-def _pcm_to_float(data: bytes, bits: int, big_endian: bool, signed: bool) -> np.ndarray:
+def _pcm_to_float(data: bytes, bits: int) -> np.ndarray:
+    """WAV PCM → float64 in [-1, 1): 8-bit samples are unsigned (offset
+    128), wider ones signed little-endian."""
     if bits == 8:
-        raw = np.frombuffer(data, dtype=np.int8 if signed else np.uint8)
-        v = raw.astype(np.float64) if signed else raw.astype(np.float64) - 128.0
-        return v / 128.0
+        return (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
     if bits == 24:
         b = np.frombuffer(data, dtype=np.uint8)
         b = b[: (len(b) // 3) * 3].reshape(-1, 3)
-        if big_endian:
-            v = (
-                (b[:, 0].astype(np.int32) << 16)
-                | (b[:, 1].astype(np.int32) << 8)
-                | b[:, 2]
-            )
-        else:
-            v = (
-                (b[:, 2].astype(np.int32) << 16)
-                | (b[:, 1].astype(np.int32) << 8)
-                | b[:, 0]
-            )
+        v = (
+            (b[:, 2].astype(np.int32) << 16)
+            | (b[:, 1].astype(np.int32) << 8)
+            | b[:, 0]
+        )
         v = np.where(v & 0x800000, v - 0x1000000, v)
         return v.astype(np.float64) / float(1 << 23)
-    dt = {16: np.int16, 32: np.int32}[bits]
-    v = np.frombuffer(data, dtype=np.dtype(dt).newbyteorder(">" if big_endian else "<"))
+    v = np.frombuffer(data, dtype={16: "<i2", 32: "<i4"}[bits])
     return v.astype(np.float64) / float(1 << (bits - 1))
 
 
@@ -107,8 +72,6 @@ def _frames(v: np.ndarray, channels: int) -> np.ndarray:
 
 _WAVE_PCM = 0x0001
 _WAVE_FLOAT = 0x0003
-_WAVE_ALAW = 0x0006
-_WAVE_ULAW = 0x0007
 _WAVE_EXT = 0xFFFE
 
 
@@ -140,16 +103,12 @@ def decode_wav(payload: bytes, meta=None) -> tuple[np.ndarray, int]:
     if tag == _WAVE_PCM:
         if bits not in (8, 16, 24, 32):
             raise ValueError(f"unsupported WAVE PCM depth {bits}")
-        v = _pcm_to_float(data, bits, False, signed=bits != 8)
+        v = _pcm_to_float(data, bits)
     elif tag == _WAVE_FLOAT:
         dt = {32: "<f4", 64: "<f8"}.get(bits)
         if dt is None:
             raise ValueError(f"unsupported WAVE float depth {bits}")
         v = np.frombuffer(data, dtype=dt).astype(np.float64)
-    elif tag == _WAVE_ULAW:
-        v = ulaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
-    elif tag == _WAVE_ALAW:
-        v = alaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
     else:
         raise ValueError(f"unsupported WAVE format tag 0x{tag:04x}")
     return _frames(v, channels), rate
@@ -176,113 +135,18 @@ def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Sun AU (.snd, big-endian)
-
-_AU_ENCODINGS = {
-    1: ("ulaw", 8), 2: ("pcm", 8), 3: ("pcm", 16), 4: ("pcm", 24),
-    5: ("pcm", 32), 6: ("float", 32), 7: ("float", 64), 27: ("alaw", 8),
-}
-
-
-def decode_au(payload: bytes, meta=None) -> tuple[np.ndarray, int]:
-    """Sun/NeXT .au → (float64 (n_frames, channels), rate)."""
-    if len(payload) < 24 or payload[:4] != b".snd":
-        raise ValueError("not an AU payload")
-    offset, size, enc, rate, channels = struct.unpack(">IIIII", payload[4:24])
-    if enc not in _AU_ENCODINGS or channels < 1 or offset < 24:
-        raise ValueError(f"unsupported AU encoding {enc}")
-    end = len(payload) if size == 0xFFFFFFFF else min(len(payload), offset + size)
-    data = payload[offset:end]
-    kind, bits = _AU_ENCODINGS[enc]
-    if kind == "ulaw":
-        v = ulaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
-    elif kind == "alaw":
-        v = alaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
-    elif kind == "float":
-        v = np.frombuffer(data, dtype=">f4" if bits == 32 else ">f8").astype(np.float64)
-    else:  # AU PCM is signed at every depth, big-endian
-        v = _pcm_to_float(data, bits, True, signed=True)
-    return _frames(v, channels), rate
-
-
-# ---------------------------------------------------------------------------
-# AIFF / AIFF-C (IFF big-endian)
-
-
-def _read_f80(b: bytes) -> float:
-    """80-bit IEEE 754 extended float (AIFF sample rates)."""
-    (se,) = struct.unpack(">H", b[:2])
-    (mant,) = struct.unpack(">Q", b[2:10])
-    sign = -1.0 if se & 0x8000 else 1.0
-    exp = se & 0x7FFF
-    if exp == 0 and mant == 0:
-        return 0.0
-    return sign * mant * 2.0 ** (exp - 16383 - 63)
-
-
-def decode_aiff(payload: bytes, meta=None) -> tuple[np.ndarray, int]:
-    """AIFF / AIFF-C → (float64 (n_frames, channels), rate). Handles
-    NONE (signed big-endian PCM), sowt (little-endian), ulaw/ULAW,
-    alaw/ALAW, fl32/FL32, fl64."""
-    if len(payload) < 12 or payload[:4] != b"FORM" or payload[8:12] not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF payload")
-    is_aifc = payload[8:12] == b"AIFC"
-    pos = 12
-    comm = None
-    ssnd = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (sz,) = struct.unpack(">I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + sz]
-        if tag == b"COMM":
-            comm = body
-        elif tag == b"SSND":
-            ssnd = body
-        pos += 8 + sz + (sz & 1)
-    if comm is None or ssnd is None or len(comm) < 18 or len(ssnd) < 8:
-        raise ValueError("AIFF missing COMM/SSND chunk")
-    channels, _nframes = struct.unpack(">HI", comm[:6])
-    (bits,) = struct.unpack(">H", comm[6:8])
-    rate = int(round(_read_f80(comm[8:18])))
-    comp = comm[18:22] if is_aifc and len(comm) >= 22 else b"NONE"
-    off, _block = struct.unpack(">II", ssnd[:8])
-    data = ssnd[8 + off :]
-    if channels < 1:
-        raise ValueError("AIFF has no channels")
-    if comp in (b"NONE", b"twos"):
-        if bits not in (8, 16, 24, 32):
-            raise ValueError(f"unsupported AIFF PCM depth {bits}")
-        v = _pcm_to_float(data, bits, True, signed=True)
-    elif comp == b"sowt":
-        v = _pcm_to_float(data, bits, False, signed=True)
-    elif comp in (b"ulaw", b"ULAW"):
-        v = ulaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
-    elif comp in (b"alaw", b"ALAW"):
-        v = alaw_to_linear(np.frombuffer(data, np.uint8)).astype(np.float64) / 32768.0
-    elif comp in (b"fl32", b"FL32"):
-        v = np.frombuffer(data, dtype=">f4").astype(np.float64)
-    elif comp in (b"fl64", b"FL64"):
-        v = np.frombuffer(data, dtype=">f8").astype(np.float64)
-    else:
-        raise ValueError(f"unsupported AIFF-C compression {comp!r}")
-    return _frames(v, channels), rate
-
-
-# ---------------------------------------------------------------------------
 # seam
 
 
 def audio_or_fake_decoder(payload: bytes, meta) -> tuple[np.ndarray, int]:
-    """Production-shaped audio decoder: WAV, AU, and AIFF/AIFC decode
-    for real; anything else (MP3, Ogg, FLAC, …) falls back to a
-    deterministic fake derived from the payload bytes so pipelines
-    keep moving — the same contract as ``image_or_fake_decoder``."""
-    for dec in (decode_wav, decode_au, decode_aiff):
-        try:
-            return dec(payload, meta)
-        except (ValueError, struct.error, IndexError):
-            continue
-    return fake_audio_decoder(payload, meta)
+    """Production-shaped audio decoder: WAV decodes for real; anything
+    else (AU, AIFF, µ-law WAV, MP3, Ogg, FLAC, …) falls back to a
+    deterministic fake derived from the payload bytes so pipelines keep
+    moving. Inject a library-backed decoder for those formats."""
+    try:
+        return decode_wav(payload, meta)
+    except (ValueError, struct.error, IndexError):
+        return fake_audio_decoder(payload, meta)
 
 
 def fake_audio_decoder(payload: bytes, meta) -> tuple[np.ndarray, int]:

@@ -35,25 +35,18 @@ def not_implemented_decoder(payload: bytes, meta) -> np.ndarray:
 
 
 def image_or_fake_decoder(payload: bytes, meta) -> np.ndarray:
-    """Production-shaped decoder for mixed web corpora: PNG decodes via
-    the stdlib PNG path, JPEG — baseline SOF0/SOF1, multi-scan
-    sequential, AND progressive SOF2 — via the stdlib JPEG path, GIF
-    (incl. interlaced/transparent/animated-first-frame) via the stdlib
-    GIF path, lossless WebP (VP8L: all transforms, meta prefix codes,
-    color cache, LZ77) via the stdlib WebP path, and anything else
-    (lossy VP8, AVIF, arithmetic-coded JPEG, …) falls back to the
-    deterministic fake so pipelines keep moving with rows flagged by
-    shape. This grows round 4's ``png_or_fake_decoder`` to cover the
-    dominant web image formats with real decoders."""
+    """Decoder for mixed corpora: PNG decodes via the stdlib PNG path,
+    lossless WebP (VP8L) via the stdlib WebP path, and anything else
+    (JPEG, GIF, lossy VP8, AVIF, …) falls back to the deterministic fake
+    so pipelines keep moving with rows flagged by shape. Real codecs for
+    the other formats are injected through the ``decoder=`` seam."""
     import struct as _struct
     import zlib as _zlib
 
-    from sfa_spark.operators.gif import decode_gif
-    from sfa_spark.operators.jpeg import decode_jpeg
     from sfa_spark.operators.png import decode_png
     from sfa_spark.operators.webp import decode_webp
 
-    for dec in (decode_png, decode_jpeg, decode_gif, decode_webp):
+    for dec in (decode_png, decode_webp):
         try:
             return dec(payload, meta)
         except (

@@ -30,7 +30,8 @@ Scale design (100 TB):
   time.
 * Estimation avoids float-summation order sensitivity: the harmonic
   denominator ``sum(2^-reg)`` is computed as an INTEGER sum scaled by
-  ``2^(64-p)`` (each term exact, decimal(38) accumulation exact), so
+  ``2^maxrank = 2^(65-p)`` (each term exact, decimal(38) accumulation
+  exact, and positive even for a rank-``maxrank`` register), so
   the estimate is a deterministic function of the registers on any
   engine — this is what makes the DuckDB oracle bit-exact.
 """
@@ -52,13 +53,13 @@ __all__ = [
 
 
 def hll_alpha_scaled(p: int) -> float:
-    """``alpha_m * m^2 * 2^(maxrank-1)`` — the numerator of the raw HLL
+    """``alpha_m * m^2 * 2^maxrank`` — the numerator of the raw HLL
     estimate against the scaled integer harmonic sum. Computed once in
     Python and embedded as the SAME double literal in the Spark plan and
     the DuckDB oracle, so both sides divide identical doubles."""
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    return alpha * m * m * float(1 << (64 - p))  # maxrank-1 == 64-p
+    return alpha * m * m * float(1 << (65 - p))  # maxrank == 65-p
 
 
 def _rank_expr(h: Column, p: int) -> Column:
@@ -128,14 +129,16 @@ def hll_estimate(
     """Cardinality estimate per group from a sparse register table.
 
     Raw estimate ``alpha_m * m^2 / sum_j 2^-reg_j`` with the harmonic
-    sum done in EXACT integer arithmetic (scaled by ``2^(maxrank-1)``,
+    sum done in EXACT integer arithmetic (scaled by ``2^maxrank``,
     accumulated in decimal(38,0)); linear counting ``m * ln(m/zeros)``
     below the standard ``2.5 m`` threshold. Output: group_cols +
     (est, zeros)."""
     m = 1 << p
     maxrank = 64 - p + 1
-    # 2^(maxrank-1-reg), reg in [1, maxrank] → exact long
-    term = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({maxrank - 1} - reg AS INT))")
+    # 2^(maxrank-reg), reg in [1, maxrank] → exact positive long; a
+    # 2^(maxrank-1) scale would shift by -1 at reg == maxrank, which the
+    # JVM wraps to 1 << 63 (a negative long)
+    term = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({maxrank} - reg AS INT))")
     amm = hll_alpha_scaled(p)
     g = registers.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("_nreg"),
@@ -143,7 +146,7 @@ def hll_estimate(
     )
     total = (
         (F.lit(m).cast("decimal(38,0)") - F.col("_nreg"))
-        * F.lit(1 << (maxrank - 1)).cast("decimal(38,0)")
+        * F.lit(1 << maxrank).cast("decimal(38,0)")
         + F.col("_sumv")
     ).cast("double")
     zeros = (F.lit(m) - F.col("_nreg")).cast("long")

@@ -755,12 +755,12 @@ WITH regs AS (
 ),
 agg AS (
   SELECT day, count(*) AS nreg,
-         SUM((1::HUGEINT << ({maxrank - 1} - reg))) AS sumv
+         SUM((1::HUGEINT << ({maxrank} - reg))) AS sumv
   FROM regs GROUP BY 1
 ),
 est AS (
   SELECT day, ({m} - nreg)::BIGINT AS zeros,
-         CAST((({m} - nreg)::HUGEINT * (1::HUGEINT << {maxrank - 1}) + sumv)
+         CAST((({m} - nreg)::HUGEINT * (1::HUGEINT << {maxrank}) + sumv)
               AS DOUBLE) AS total
   FROM agg
 ),
@@ -2075,8 +2075,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing over opaque binary payloads: documents' text
     bytes become the payload column with typed metadata, then the
     mapInPandas decode→pool feature kernel runs with the deterministic
-    fake decoder (the real decoder is an injection point — see
-    sfa_spark.operators.png for the stdlib PNG path).
+    fake decoder (a real image codec is injected through the
+    ``decoder=`` seam of ``multimodal.extract_features``).
 
     Oracled bit-exactly in DuckDB: the fake decoder tiles the payload
     bytes to h·w·c = 24·32·3 (np.resize cycling ≡ ``i % len`` byte

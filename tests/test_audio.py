@@ -1,32 +1,26 @@
 """Audio codec + feature tests.
 
 External vectors: CPython's bundled pluck-* clips (PSF-licensed public
-test data, tests/fixtures/audio/) — one waveform in three containers
-(WAV/AIFF/AU), four PCM depths, and µ-law/A-law companding. Where this
-interpreter still ships the legacy stdlib parsers (wave always;
-aifc/sunau/audioop until 3.12) they serve as independent bit-exact
-oracles; on newer interpreters those tests skip and the cross-container
-correlation oracles keep the coverage.
+test data, tests/fixtures/audio/) — one waveform as WAV at four PCM
+depths plus a WAVE_FORMAT_EXTENSIBLE copy. The stdlib ``wave`` reader
+is the independent bit-exact oracle; the depths cross-check each other
+by correlation. Formats other than WAV are not decoded: they must fail
+loudly in ``decode_wav`` and fall back to the fake in the seam.
 """
 
 import os
 import struct
-import warnings
 
 import numpy as np
 import pytest
 
 from sfa_spark.operators.audio import (
-    alaw_to_linear,
     audio_features,
     audio_fingerprint,
     audio_or_fake_decoder,
-    decode_aiff,
-    decode_au,
     decode_wav,
     encode_wav,
     fake_audio_decoder,
-    ulaw_to_linear,
 )
 
 F = os.path.join(os.path.dirname(__file__), "fixtures", "audio")
@@ -39,19 +33,6 @@ def fx(name: str) -> bytes:
 def corr(a: np.ndarray, b: np.ndarray) -> float:
     n = min(a.size, b.size)
     return float(np.corrcoef(a.ravel()[:n], b.ravel()[:n])[0, 1])
-
-
-def test_g711_expansion_matches_audioop_tables():
-    audioop = pytest.importorskip("audioop")
-    raw = bytes(range(256))
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        want_u = np.frombuffer(audioop.ulaw2lin(raw, 2), dtype="<i2")
-        want_a = np.frombuffer(audioop.alaw2lin(raw, 2), dtype="<i2")
-    got_u = ulaw_to_linear(np.frombuffer(raw, np.uint8))
-    got_a = alaw_to_linear(np.frombuffer(raw, np.uint8))
-    assert np.array_equal(got_u, want_u)
-    assert np.array_equal(got_a, want_a)
 
 
 @pytest.mark.parametrize(
@@ -85,67 +66,15 @@ def test_wave_format_extensible_equals_plain_24bit():
     assert ra == rb and np.array_equal(a, b)
 
 
-def test_aiff_matches_stdlib_aifc():
-    aifc = pytest.importorskip("aifc")
-    import io
-
-    payload = fx("pluck-pcm16.aiff")
-    samples, rate = decode_aiff(payload)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        af = aifc.open(io.BytesIO(payload))
-        raw = af.readframes(af.getnframes())
-        assert rate == af.getframerate()
-        assert samples.shape == (af.getnframes(), af.getnchannels())
-    want = np.frombuffer(raw, ">i2").astype(np.float64) / 32768.0
-    assert np.array_equal(samples.ravel(), want)
-
-
-def test_au_matches_stdlib_sunau():
-    sunau = pytest.importorskip("sunau")
-    import io
-
-    payload = fx("pluck-pcm16.au")
-    samples, rate = decode_au(payload)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        au = sunau.open(io.BytesIO(payload))
-        raw = au.readframes(au.getnframes())
-        assert rate == au.getframerate()
-    want = np.frombuffer(raw, ">i2").astype(np.float64) / 32768.0
-    assert np.array_equal(samples.ravel(), want)
-
-
-def test_ulaw_au_matches_audioop_expansion():
-    audioop = pytest.importorskip("audioop")
-    payload = fx("pluck-ulaw.au")
-    samples, rate = decode_au(payload)
-    offset, size = struct.unpack(">II", payload[4:12])
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        want = np.frombuffer(
-            audioop.ulaw2lin(payload[offset : offset + size], 2), "<i2"
-        ).astype(np.float64) / 32768.0
-    assert np.array_equal(samples.ravel(), want)
-
-
 def test_cross_container_same_waveform():
-    """The same pluck recording shipped in three independent container
-    formats (+ two companded variants) must decode to near-identical
-    waveforms (fixtures differ by ±11/32768 — independent conversions)."""
+    """The same pluck recording at four PCM depths must decode to
+    near-identical waveforms (independent conversions of one clip)."""
     w, rw = decode_wav(fx("pluck-pcm16.wav"))
-    a, ra = decode_aiff(fx("pluck-pcm16.aiff"))
-    u, ru = decode_au(fx("pluck-pcm16.au"))
-    assert rw == ra == ru == 11025
-    assert w.shape == a.shape == u.shape == (3307, 2)
-    assert corr(w, a) > 0.9999 and corr(w, u) > 0.9999
+    assert rw == 11025 and w.shape == (3307, 2)
     for name in ("pluck-pcm8.wav", "pluck-pcm24.wav", "pluck-pcm32.wav"):
-        d, _ = decode_wav(fx(name))
+        d, rd = decode_wav(fx(name))
+        assert rd == rw and d.shape == w.shape, name
         assert corr(d, w) > 0.999, name
-    ul, _ = decode_au(fx("pluck-ulaw.au"))
-    al, _ = decode_aiff(fx("pluck-alaw.aifc"))
-    ua, _ = decode_aiff(fx("pluck-ulaw.aifc"))
-    assert corr(ul, w) > 0.999 and corr(al, w) > 0.999 and corr(ua, w) > 0.999
 
 
 def test_wav_round_trip():
@@ -185,8 +114,8 @@ def test_fingerprint_determinism_and_discrimination():
     assert f1 == audio_fingerprint(chirp.copy())
     assert len(f1) == 8 and f1 == sorted(f1)
     assert f1 != audio_fingerprint(other)
-    w, rw = decode_wav(fx("pluck-pcm16.wav"))
-    a, _ = decode_aiff(fx("pluck-pcm16.aiff"))
+    w, _ = decode_wav(fx("pluck-pcm16.wav"))
+    a, _ = decode_wav(fx("pluck-pcm24.wav"))
     fw = audio_fingerprint(w.mean(axis=1))
     fa = audio_fingerprint(a.mean(axis=1))
     # near-identical waveforms land in mostly the same landmark set
@@ -196,8 +125,8 @@ def test_fingerprint_determinism_and_discrimination():
 def test_seam_dispatch_and_fake_fallback():
     s, rate = audio_or_fake_decoder(fx("pluck-pcm16.wav"), {})
     assert rate == 11025 and s.shape == (3307, 2)
-    s, rate = audio_or_fake_decoder(fx("pluck-pcm16.au"), {})
-    assert rate == 11025
+    s, rate = audio_or_fake_decoder(fx("pluck-pcm24-ext.wav"), {})
+    assert rate == 11025 and s.shape == (3307, 2)
     garbage = b"ID3\x03\x00" + bytes(range(200))  # an mp3-ish payload
     s, rate = audio_or_fake_decoder(garbage, {"sample_rate": 16000})
     sf, rf = fake_audio_decoder(garbage, {"sample_rate": 16000})
@@ -205,11 +134,25 @@ def test_seam_dispatch_and_fake_fallback():
 
 
 def test_corrupt_payloads_raise():
-    for dec in (decode_wav, decode_au, decode_aiff):
-        with pytest.raises(ValueError):
-            dec(b"not audio at all")
+    with pytest.raises(ValueError):
+        decode_wav(b"not audio at all")
     with pytest.raises(ValueError):
         decode_wav(b"RIFF\x08\x00\x00\x00WAVEdata")  # no fmt chunk
+
+
+def test_companded_wav_fails_loudly_and_seam_falls_back_to_fake():
+    # format tag 0x0007 is G.711 µ-law: a valid WAV, but not one decoded here
+    raw = bytes(range(256)) * 4
+    fmt = struct.pack("<HHIIHH", 0x0007, 1, 8000, 8000, 1, 8)
+    payload = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    payload += b"data" + struct.pack("<I", len(raw)) + raw
+    payload = b"RIFF" + struct.pack("<I", 4 + len(payload)) + b"WAVE" + payload
+    with pytest.raises(ValueError, match="^unsupported WAVE format tag 0x0007$"):
+        decode_wav(payload)
+    meta = {"sample_rate": 8000}
+    s, rate = audio_or_fake_decoder(payload, meta)
+    sf, rf = fake_audio_decoder(payload, meta)
+    assert rate == rf and np.array_equal(s, sf)
 
 
 def test_extract_audio_features_spark_end_to_end(spark):

@@ -119,6 +119,26 @@ def test_hll_accuracy_raw_regime(spark):
     assert abs(est.est - n) / n < 0.05
 
 
+def test_hll_estimate_rank_53_register(spark):
+    # p=12: maxrank is 53, reached when the top 52 hash bits are all zero.
+    # Such a register's term must be positive: with every register filled
+    # (raw regime) it adds 2^-53 to the harmonic sum, so the estimate is
+    # within rounding of the same input with a rank-52 register.
+    m = 4096
+
+    def est(top_rank):
+        regs = pd.DataFrame({"g": 0, "reg_idx": np.arange(m), "reg": 3})
+        regs.loc[m - 1, "reg"] = top_rank
+        return hll_estimate(spark.createDataFrame(regs), ["g"]).collect()[0]
+
+    r53, r52 = est(53), est(52)
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    want = alpha * m * m / ((m - 1) * 2.0**-3 + 2.0**-53)
+    assert r53.zeros == 0
+    assert r53.est == round(want, 4) == 23635.1041
+    assert r53.est == r52.est
+
+
 def test_cms_never_undercounts_and_is_tight_when_sparse(spark):
     rng = np.random.default_rng(8)
     # zipf-ish: one heavy hitter + a tail
